@@ -100,24 +100,28 @@ object Manifest {
       }
   }
 
-  /** Read the committed snapshot through the manifest: the union of
-    * exactly the directories the current manifest references, with
-    * the bucket id restored as a column. Never lists or reads a
-    * directory the manifest does not name, so a concurrent writer's
-    * in-progress version directories are invisible.
+  /** Read the committed snapshot through the manifest: exactly the
+    * directories it references, as ONE scan ([[readBuckets]], bucket
+    * taken from the path) whose jobs do not grow with `nBuckets`. Never
+    * lists or reads a directory the manifest does not name, so a
+    * concurrent writer's in-progress version directories are invisible.
     */
   def readSnapshot(spark: SparkSession, snapshotPath: String): DataFrame = {
     val root = new Path(snapshotPath)
     // FS from the path, not the session default: the snapshot may
     // live on a scheme other than fs.defaultFS
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val entries = read(fs, root)
-    require(entries.nonEmpty, s"no committed snapshot at $snapshotPath")
-    entries.toSeq.sortBy(_._1)
-      .map { case (b, rel) =>
-        spark.read.parquet(new Path(root, rel).toString)
-          .withColumn("bucket", lit(b))
-      }
-      .reduce(_.unionByName(_))
+    readBuckets(spark, root, read(fs, root).toSeq)
+  }
+
+  /** Entries as one multi-path parquet scan; `bucket` is parsed from `_metadata.file_path`
+    * (partition discovery rejects leaf dirs under different version dirs). */
+  private[graft] def readBuckets(spark: SparkSession, root: Path,
+      entries: Seq[(Int, String)]): DataFrame = {
+    require(entries.nonEmpty && entries.forall { case (b, rel) => rel.endsWith(s"/bucket=$b") },
+      s"no committed snapshot at $root (manifest entries: $entries)")
+    spark.read.parquet(entries.sortBy(_._1).map(e => new Path(root, e._2).toString): _*)
+      .withColumn("bucket",
+        regexp_extract(col("_metadata.file_path"), "/bucket=(\\d+)/[^/]*$", 1).cast("int"))
   }
 }

@@ -38,8 +38,9 @@ object Pipeline {
     */
   def ingestAndClean(spark: SparkSession, csvPath: String): DataFrame =
     Readers.csvWithQuarantine(spark, csvPath, requestSchema)
-      .filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
+      // CSV flags a bad field only if its column is read: read them all
+      .filter(requestSchema.fieldNames.map(c => col(c).isNull || col(c).isNotNull)
+        .foldLeft(col("_corrupt_record").isNull)(_ && _))
       .select(
         col("request_id"), col("ts"),
         lpad(trim(col("zip")), 5, "0").as("zip"),

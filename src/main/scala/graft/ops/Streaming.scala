@@ -163,10 +163,9 @@ object Streaming {
     * store. `batchB` must carry an int `bucket` column that is a pure
     * function of the upsert key; `merge(current, batchB)` combines
     * the touched buckets' committed rows (bucket column restored)
-    * with the batch. Staging, touched-bucket verification, the
-    * manifest-pointer commit, and retention-grace vacuum are exactly
-    * the discipline the original sink carried (crash-spec'd in
-    * StreamingSpec — those specs now exercise this shared core).
+    * with the batch, read as ONE scan (bucket taken from the path): jobs
+    * do not grow with `nBuckets`. Staging, touched-bucket checks, the
+    * manifest commit and retention vacuum are crash-spec'd in StreamingSpec.
     */
   private[graft] def upsertBatchInto(snapshotPath: String, batchB: DataFrame,
       batchId: Long, merge: (DataFrame, DataFrame) => DataFrame,
@@ -184,12 +183,8 @@ object Streaming {
     if (touched.nonEmpty) {
       val manifest = graft.io.Manifest.read(fs, root)
       val currentDirs = touched.toSeq.flatMap(b => manifest.get(b).map(b -> _))
-      val current =
-        if (currentDirs.isEmpty) batchB.limit(0)
-        else currentDirs.map { case (b, rel) =>
-          spark.read.parquet(new org.apache.hadoop.fs.Path(root, rel).toString)
-            .withColumn("bucket", lit(b))
-        }.reduce(_.unionByName(_))
+      val current = if (currentDirs.isEmpty) batchB.limit(0)
+        else graft.io.Manifest.readBuckets(spark, root, currentDirs)
       val merged = merge(current, batchB)
       // staging dir: attempt-unique w.r.t. the LIVE manifest — a
       // dir the current manifest references must never be deleted

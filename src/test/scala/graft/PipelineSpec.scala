@@ -58,4 +58,36 @@ class PipelineSpec extends SparkSpec {
     val back = spark.read.option("header", "true").csv(out)
     assert(back.count() === 4)
   }
+
+  test("ingestAndClean quarantines malformed rows under every projection") {
+    // the CSV parser flags a bad field only when the query reads its
+    // column; row 5's only bad field is ts, row 3's is request_id
+    val d = Files.createTempDirectory("etlq").toString
+    val csv = s"$d/raw.csv"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(csv),
+      """request_id,ts,zip,category_code,outcome
+        |1,2024-01-05 10:00:00,15213,housing,referred
+        |2,2024-01-06 09:00:00,15090,food,resolved
+        |notanint,2024-01-07 11:30:00,15001,legal,open
+        |4,2024-02-03 12:00:00,15106,utilities,NA
+        |5,not-a-time,15222,transport,pending
+        |""".stripMargin)
+    val clean = ops.Pipeline.ingestAndClean(spark, csv)
+    assert(clean.count() === 3L)
+    clean.columns.foreach { c =>
+      val vals = clean.select(c).collect().map(r => String.valueOf(r.get(0)))
+      assert(vals.length === 3, s"select($c) passed malformed rows: ${vals.toSeq}")
+      assert(!vals.exists(v => Set("5", "15222", "TRANSPORT", "pending", "15001")(v)), c)
+    }
+    assert(clean.select("request_id").as[Long].collect().toSet === Set(1L, 2L, 4L))
+    // the CSV scan reads every schema column whatever is projected
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (df <- Seq(clean.select("zip"), clean.groupBy().count())) {
+      val scans = H.collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.requiredSchema.fieldNames.toSet
+      }
+      assert(scans.nonEmpty && scans.forall(ops.Pipeline.requestSchema.fieldNames.toSet.subsetOf),
+        s"a CSV scan skipped a column: $scans")
+    }
+  }
 }
